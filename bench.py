@@ -6,13 +6,13 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Per-query time is wall clock around a full materialization (count of the
 final DataFrame — forces the whole plan, no driver collect of payloads).
 
-Measurement protocol (VERDICT r03 #1): every memo (jobs._TAGGED_CACHE,
-corpus._DIM_CACHE, corpus._WORDS_CACHE, tracked persists) is cleared
-BEFORE each timed run, so best-of-N separates co-tenant noise from plan
-regressions without aliasing warm caches into the headline — the
-``queries`` numbers are first-run-comparable across rounds. Warm-session
-times (memos populated, the steady-state of a long-lived service session)
-are reported separately as ``queries_warm`` for the memo-using queries.
+Measurement protocol (VERDICT r03 #1): every tracked persist is released
+(``session.reset_memos``) BEFORE each timed run, so best-of-N separates
+co-tenant noise from plan regressions without aliasing warm caches into
+the headline — the ``queries`` numbers are first-run-comparable across
+rounds. Warm-session times (the previous run's persisted tables still
+cached) are reported separately as ``queries_warm`` for the queries that
+persist their dims, tagged table or token table.
 
 Both dim strategies are benched (VERDICT r03 #2): the dict path
 (collected broadcast dims — the sub-cap regime) AND the frame-dim path
@@ -46,8 +46,8 @@ HEADLINE = [
     "w_windows",
 ]
 
-#: queries whose wall-clock includes memo derivation (tagged table, dims,
-#: shared token scan) — these get an extra warm-session measurement.
+#: queries whose wall-clock includes a persisted derivation (tagged table,
+#: dims, shared token scan) — these get an extra warm-session measurement.
 WARM_QUERIES = [
     "kg_triples",
     "kg_triples_dimframes",
@@ -129,7 +129,7 @@ def main() -> None:
     sentinel()
     all_sentinels.clear()  # throwaway: JIT + codegen for the sentinel itself
 
-    # best-of-N per query with memos cleared before EVERY run: this box
+    # best-of-N per query with persists released before EVERY run: this box
     # has multi-minute co-tenant noise waves (BENCH/BASELINE.md); the min
     # of N cold runs separates plan regressions from noise, and the reset
     # keeps each run a genuine first run (no warm-cache aliasing).
@@ -151,7 +151,7 @@ def main() -> None:
         all_runs[name] = runs
         timings[name] = min(runs)
         if name in WARM_QUERIES:
-            # memos are warm from the last cold run — steady-state time,
+            # the last cold run's persists are still cached — steady-state time,
             # best-of-N like the cold number (r04 nit: a single warm run
             # inherited full co-tenant variance)
             wruns = []
@@ -313,9 +313,9 @@ def main() -> None:
         "queries_warm": warm,
         "query_runs": all_runs,
         "bench_runs": n_runs,
-        "bench_protocol": "memos reset before every run; min of N cold "
-                          "runs (first-run-comparable); queries_warm = "
-                          "min of N runs with memos warm; noise_index = "
+        "bench_protocol": "persists released before every run; min of N "
+                          "cold runs (first-run-comparable); queries_warm = "
+                          "min of N runs with persists warm; noise_index = "
                           "max(bracketing sentinel times)/min sentinel — "
                           "~1.0 clean window, >1.3 co-tenant wave",
         "noise_index": noise_index,

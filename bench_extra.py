@@ -96,11 +96,8 @@ def main() -> None:
         t0 = time.time()
         dims_from_documents(spark, sf_dir)
         rec("dims_collect", round(time.time() - t0, 3))
-        # second cold call in the same process (vocab derives straight
-        # from the scan since r06 — there is no words-memo warmup to
-        # isolate anymore; the delta vs the first call is JIT/codegen)
-        from kbspark import corpus as _corpus
-        _corpus._DIM_CACHE.clear()
+        # second call in the same process: the delta vs the first call
+        # is JIT/codegen
         t0 = time.time()
         dims_from_documents(spark, sf_dir)
         rec("dims_collect_2nd", round(time.time() - t0, 3))

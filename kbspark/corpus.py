@@ -314,42 +314,19 @@ def pages_from_documents(spark, sf_dir: str, spread: bool = True):
 #: DataFrame dim path (``dim_frames_from_documents`` + relational J5).
 DIM_COLLECT_CAP = 500_000
 
-#: per-process memo of collected dims, keyed by sf_dir (the driver runs
-#: many contract queries in one process; /root/testdata is immutable, so
-#: re-deriving the same vocab dictionary per query is pure waste). The
-#: over-cap outcome is memoized too (as None) so repeated frame-path runs
-#: don't re-execute the limit(cap+1) probe every invocation.
-_DIM_CACHE: dict[
-    tuple[str, int], tuple[dict[str, str], dict[str, str]] | None
-] = {}
-
-
-#: per-(session, sf_dir) persisted whitespace-token table shared by the
-#: dedup families (VERDICT r02 #5: t_lsh and t_simhash each re-tokenized
-#: the corpus). Deliberately NOT release_tracked — it is a cross-query
-#: memo like jobs._TAGGED_CACHE, bounded to the most recent entry.
-_WORDS_CACHE: dict[tuple, object] = {}
-
-
 def words_from_documents(spark, sf_dir: str):
-    """(doc_id, _w) token table over documents.parquet, tokenized once
-    per session and persisted (kbspark.textops.words_table shape)."""
+    """(doc_id, _w) token table over documents.parquet
+    (kbspark.textops.words_table shape), persisted through
+    ``session.persist_tracked`` so a query's sibling dedup families
+    tokenize the corpus once and the table is released with the query's
+    other persists."""
+    from kbspark.session import persist_tracked
     from kbspark.textops import words_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WORDS_CACHE:
-        return _WORDS_CACHE[key]
     docs = spread_small_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), spark
     )
-    wdf = words_table(docs).persist()
-    while _WORDS_CACHE:
-        try:
-            _WORDS_CACHE.popitem()[1].unpersist()
-        except Exception:
-            pass  # entry from a stopped session — nothing to release
-    _WORDS_CACHE[key] = wdf
-    return wdf
+    return persist_tracked(words_table(docs))
 
 
 def _entity_type_of(title: str) -> str:
@@ -363,11 +340,11 @@ def vocab_titles(spark, sf_dir: str):
     (column ``title``) — the shared input of both dim paths.
 
     Derives straight from the documents scan rather than the persisted
-    words memo (r06): the memo's repartition + cache materialization is
-    pure overhead for a vocab-only consumer (A/B: 0.33s vs 0.54-0.75s
-    cold at sf0.1), the split itself is a trivial fraction of the scan,
-    and the RESULT is memoized anyway (_DIM_CACHE / _DIMFRAME_CACHE) so
-    a session derives the vocabulary at most once per dim path. The
+    ``words_from_documents`` table (r06): its repartition + cache
+    materialization is pure overhead for a vocab-only consumer (A/B:
+    0.33s vs 0.54-0.75s cold at sf0.1), the split itself is a trivial
+    fraction of the scan, and each job resolves its dims once and passes
+    them down, so a job derives the vocabulary once. The
     dedup families keep sharing ``words_from_documents``; the token
     DEFINITION stays single-sourced in ``textops.words_table`` (r06
     review: an inline re-split could silently diverge from the dedup
@@ -392,17 +369,6 @@ def vocab_titles(spark, sf_dir: str):
     return words_table(docs).select(F.explode(arr).alias("title")).distinct()
 
 
-#: per-(session, sf_dir) persisted DataFrame dims for the frame path —
-#: the frame pipelines reference the entity dim in up to ~6 join
-#: subtrees per query (resolve precedence joins, triple families, alias
-#: frames); without materialization EVERY reference re-executes the full
-#: words-scan -> explode -> distinct -> TYPE pipeline (r06 plan audit:
-#: 21 parquet scans / 42 MapInPandas nodes in one kg_el_frames plan).
-#: Same lifecycle as _WORDS_CACHE: bounded to the most recent entry,
-#: cleared by session.reset_memos.
-_DIMFRAME_CACHE: dict[tuple, tuple] = {}
-
-
 def dim_frames_from_documents(spark, sf_dir: str):
     """The scale path: entity/redirect dims as DataFrames — nothing is
     ever collected to the driver. Returns ``(entity_dim, redirect_dim)``
@@ -410,18 +376,18 @@ def dim_frames_from_documents(spark, sf_dir: str):
     (alias, page_title). TYPE is computed inside an Arrow batch so its
     byte-sum semantics stay identical to the dict path.
 
-    The entity dim is persisted and memoized per (session, sf_dir):
-    every frame-path query joins it several times, and at 100 TB
-    materializing the corpus-derived dictionary once (the reference
-    writes its dictionary before tagging, ner.py:254-256) beats
-    re-deriving it per join subtree by the width of the corpus scan."""
+    The entity dim is persisted through ``session.persist_tracked``:
+    a frame-path job references it in up to ~6 join subtrees (resolve
+    precedence joins, triple families, alias frames), and without
+    materialization every reference re-executes the full words-scan ->
+    explode -> distinct -> TYPE pipeline (r06 plan audit: 21 parquet
+    scans / 42 MapInPandas nodes in one kg_el_frames plan). The
+    reference likewise writes its dictionary once before tagging
+    (ner.py:254-256). Call once per job and pass the frames down."""
     from pyspark.sql import functions as F
 
+    from kbspark.session import persist_tracked
     from kbspark.triples import qid_col
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DIMFRAME_CACHE:
-        return _DIMFRAME_CACHE[key]
 
     def typed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -432,19 +398,13 @@ def dim_frames_from_documents(spark, sf_dir: str):
                 }
             )
 
-    ent = vocab_titles(spark, sf_dir).mapInPandas(
+    ent = persist_tracked(vocab_titles(spark, sf_dir).mapInPandas(
         typed, schema="page_title string, TYPE string"
-    ).withColumn("QID", qid_col()).persist()
+    ).withColumn("QID", qid_col()))
     red = ent.select(
         F.concat(F.col("page_title"), F.lit("_redir")).alias("alias"),
         "page_title",
     )
-    while _DIMFRAME_CACHE:
-        try:
-            _DIMFRAME_CACHE.popitem()[1][0].unpersist()
-        except Exception:
-            pass  # entry from a stopped session — nothing to release
-    _DIMFRAME_CACHE[key] = (ent, red)
     return ent, red
 
 
@@ -457,17 +417,12 @@ def try_dims_from_documents(
     unbounded vocabulary just to discover it was too big."""
     if max_rows is None:
         max_rows = DIM_COLLECT_CAP
-    key = (sf_dir, max_rows)
-    if key in _DIM_CACHE:
-        return _DIM_CACHE[key]
     rows = vocab_titles(spark, sf_dir).limit(max_rows + 1).collect()
     if len(rows) > max_rows:
-        _DIM_CACHE[key] = None
         return None
     titles = sorted(r["title"] for r in rows)
     entity_types = {t: _entity_type_of(t) for t in titles}
     redirect_targets = {f"{t}_redir": t for t in titles}
-    _DIM_CACHE[key] = (entity_types, redirect_targets)
     return entity_types, redirect_targets
 
 

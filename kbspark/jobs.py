@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kbspark.corpus import (
     dim_frames_from_documents,
-    dims_from_documents,
     pages_from_documents,
     try_dims_from_documents,
 )
@@ -56,10 +55,9 @@ def flagship_triples(spark: SparkSession, sf_dir: str,
     pages = pages_df if pages_df is not None else pages_from_documents(
         spark, sf_dir
     )
-    kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
-    dims = try_dims_from_documents(spark, sf_dir, **kw)
-    if dims is None:
-        entity_dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
+    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
+    if frames is not None:
+        entity_dim, redirect_dim = frames
         raw = mention_stage_raw(pages, spark)
         # dims here are corpus-scaling by definition — never force a
         # broadcast; the planner/AQE picks (round-3 review finding)
@@ -67,82 +65,66 @@ def flagship_triples(spark: SparkSession, sf_dir: str,
             raw, entity_dim, redirect_dim, broadcast_dims=False
         )
         return build_triples_from_frames(mentions, entity_dim, redirect_dim)
-    entity_types, redirect_targets = dims
+    entity_types, redirect_targets = dicts
     mentions = mention_stage(pages, spark, entity_types, redirect_targets)
     return build_triples(spark, mentions, entity_types, redirect_targets)
 
 
-#: per-(session, sf_dir) materialized tagged table — the reference's own
-#: dataflow: `tagged` is written ONCE (ner.py:267-288) and every consumer
-#: (stats, EL) reads the materialization instead of re-running extraction.
-#: Bounded (ADVICE r02): only the most recent entries stay pinned; an
-#: evicted table is unpersisted (recompute-safe — everything upstream is
-#: deterministic).
-_TAGGED_CACHE: dict[tuple, DataFrame] = {}
-_TAGGED_CACHE_MAX = 2
-
-
-def _tagged_cache_put(key: tuple, tagged: DataFrame) -> None:
-    _TAGGED_CACHE[key] = tagged
-    while len(_TAGGED_CACHE) > _TAGGED_CACHE_MAX:
-        old_key = next(iter(_TAGGED_CACHE))
-        old = _TAGGED_CACHE.pop(old_key)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+def _job_dims(spark: SparkSession, sf_dir: str,
+              dim_collect_cap: int | None):
+    """A job's dims, derived once and passed down: ``(dicts, None)`` when
+    the vocabulary collects under the cap (``try_dims_from_documents``),
+    else ``(None, (entity_dim, redirect_dim))`` as DataFrames."""
+    kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
+    dicts = try_dims_from_documents(spark, sf_dir, **kw)
+    if dicts is not None:
+        return dicts, None
+    return None, dim_frames_from_documents(spark, sf_dir)
 
 
 def tagged_table(spark: SparkSession, sf_dir: str,
-                 use_cache: bool = True,
                  dim_collect_cap: int | None = None,
                  pages_df: DataFrame | None = None) -> DataFrame:
     """documents → pages → per-sentence BIO-tagged table (the reference's
-    `tagged` table with typed nested arrays, ner.py:196-197), persisted
-    once per session like the reference's materialized SQLite table.
+    `tagged` table with typed nested arrays, ner.py:196-197).
 
     Dim strategy is size-gated like the flagship (VERDICT r02 #2): a
     dictionary-sized vocabulary annotates with broadcast dicts; above the
     cap nothing is collected and each page resolves its links through a
     per-page map built by relational joins (``annotate_stage_frames``).
 
-    ``pages_df`` overrides the corpus (dims still derive from ``sf_dir``);
-    an overridden corpus is never cached — the memo is keyed on sf_dir."""
+    ``pages_df`` overrides the corpus (dims still derive from ``sf_dir``)."""
     pin_session_conf(spark)
-    if pages_df is not None:
-        use_cache = False
-    key = (spark.sparkContext.applicationId, sf_dir, dim_collect_cap)
-    if use_cache and key in _TAGGED_CACHE:
-        # refresh recency (ADVICE r03): eviction pops the FRONT of the
-        # dict, so a hit must move its key to the back for true LRU —
-        # otherwise alternating three keys evicts the hottest table
-        _TAGGED_CACHE[key] = _TAGGED_CACHE.pop(key)
-        return _TAGGED_CACHE[key]
-    kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
-    dims = try_dims_from_documents(spark, sf_dir, **kw)
-    if dims is None:
-        # frames chain: leave the scan serial — the chain is many small
-        # stages and wide fan-out costs more in scheduling than its
-        # python passes gain (see pages_from_documents docstring); the
-        # tokenize pass inherits the cleaned side's partitioning
-        # through the broadcast maps join (annotate_stage_frames)
-        pages = pages_df if pages_df is not None else pages_from_documents(
-            spark, sf_dir, spread=False
-        )
-        entity_dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
+    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
+    return _tagged_table(spark, sf_dir, dicts, frames, pages_df)
+
+
+def _tagged_table(spark: SparkSession, sf_dir: str, dicts, frames,
+                  pages_df: DataFrame | None) -> DataFrame:
+    """``tagged_table`` over dims the caller already resolved
+    (``_job_dims``). The tagged table of the corpus itself is persisted
+    through ``persist_tracked`` — like the reference's table, written
+    once (ner.py:267-288) and read by every consumer; an overridden
+    ``pages_df`` is left to its caller."""
+    # frames chain: leave the scan serial — the chain is many small
+    # stages and wide fan-out costs more in scheduling than its python
+    # passes gain (see pages_from_documents docstring); the tokenize pass
+    # inherits the cleaned side's partitioning through the broadcast maps
+    # join (annotate_stage_frames)
+    pages = pages_df if pages_df is not None else pages_from_documents(
+        spark, sf_dir, spread=frames is None
+    )
+    if frames is not None:
+        entity_dim, redirect_dim = frames
         tagged = annotate_stage_frames(
             pages, spark, entity_dim, redirect_dim, broadcast_dims=False
         )
     else:
-        pages = pages_df if pages_df is not None else pages_from_documents(
-            spark, sf_dir
-        )
-        entity_types, redirect_targets = dims
+        entity_types, redirect_targets = dicts
         tagged = annotate_stage(pages, spark, entity_types, redirect_targets)
-    if use_cache:
-        tagged = tagged.persist()
-        _tagged_cache_put(key, tagged)
-    return tagged
+    if pages_df is not None:
+        return tagged
+    return persist_tracked(tagged)
 
 
 def entity_linking_job(spark: SparkSession, sf_dir: str,
@@ -159,7 +141,6 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
     driver collect, no forced broadcasts, AQE picks the join strategies."""
     from pyspark.sql import functions as F
 
-    from kbspark.corpus import try_dims_from_documents as _try_dims
     from kbspark.linking import (
         entity_context_profiles,
         link_entities,
@@ -169,11 +150,8 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
     from kbspark.triples import entity_dim_df
 
     pin_session_conf(spark)
-    kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
-    dims = _try_dims(spark, sf_dir, **kw)
-
-    tagged = tagged_table(spark, sf_dir, dim_collect_cap=dim_collect_cap,
-                          pages_df=pages_df)
+    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
+    tagged = _tagged_table(spark, sf_dir, dicts, frames, pages_df)
     # one full-corpus extraction pass: spans feed BOTH candidate mining
     # (surface->gt pairs) and linking — no second mention_stage scan
     # JVM span extraction (mention_spans_sql): value-identical to the
@@ -184,15 +162,15 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
 
     from kbspark.triples import redirect_alias_frame
 
-    if dims is None:
+    if frames is not None:
         # frame path: dims are themselves big data
-        dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
+        dim, redirect_dim = frames
         red = redirect_alias_frame(
             spark, dim, redirect_dim=redirect_dim, proba=0.0
         )
         dim_hint = "auto"
     else:
-        entity_types, redirect_targets = dims
+        entity_types, redirect_targets = dicts
         dim = entity_dim_df(spark, entity_types)
         red = redirect_alias_frame(
             spark, dim, redirect_targets=redirect_targets, proba=0.0

@@ -17,17 +17,23 @@ def get_spark(
     app: str = "kbspark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "24g",
+    driver_memory: str | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
-    ``shuffle_partitions`` defaults to ``cpus`` — on a real cluster this
-    would be ~2-3x total cores; AQE coalesces the excess either way.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or the CPUs
+    this process may run on. ``driver_memory`` defaults to half of the
+    machine's physical RAM. ``shuffle_partitions`` defaults to ``cpus`` —
+    on a real cluster this would be ~2-3x total cores; AQE coalesces the
+    excess either way.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                      len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or cpus
+    if driver_memory is None:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        driver_memory = f"{ram // 2 // 2**20}m"
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -57,8 +63,9 @@ def get_spark(
     return spark
 
 
-#: DataFrames persisted inside operators (shingle/block/member tables,
-#: EL spans). A contract/driver session runs ~50 queries in one process;
+#: Every DataFrame kbspark persists (frame entity dim, tagged table,
+#: words table, shingle/block/member tables, EL spans). A
+#: contract/driver session runs ~50 queries in one process;
 #: without release the cached partitions of every query accumulate for
 #: the session lifetime (ADVICE r02). Operators register their persists
 #: here; ``release_tracked`` drops them all — called between contract
@@ -139,40 +146,14 @@ def release_rdd_ids(spark, ids) -> int:
 
 
 def reset_memos() -> int:
-    """Clear every cross-query memo (jobs._TAGGED_CACHE, corpus._DIM_CACHE,
-    corpus._WORDS_CACHE) plus tracked persists, unpersisting cached tables.
+    """Release every tracked persist (``release_tracked``); returns how
+    many were released.
 
-    Benchmarks call this between repeated runs of one query so best-of-N
-    separates co-tenant noise from plan regressions WITHOUT aliasing warm
-    memo hits into the "first run" number (VERDICT r03 #1). Everything
-    memoized is deterministic, so clearing is never a correctness event.
-    Returns how many persisted tables were released."""
-    from kbspark import corpus, jobs
-
-    n = 0
-    for df in list(jobs._TAGGED_CACHE.values()):
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    jobs._TAGGED_CACHE.clear()
-    for df in list(corpus._WORDS_CACHE.values()):
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    corpus._WORDS_CACHE.clear()
-    for ent, _red in list(corpus._DIMFRAME_CACHE.values()):
-        try:
-            ent.unpersist()
-            n += 1
-        except Exception:
-            pass
-    corpus._DIMFRAME_CACHE.clear()
-    corpus._DIM_CACHE.clear()
-    return n + release_tracked()
+    kbspark keeps no cross-call memo: each job derives its dims once and
+    passes them down, and every table it persists goes through
+    ``persist_tracked``. Benchmarks call this between repeated runs so
+    each run starts with nothing cached."""
+    return release_tracked()
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:

@@ -36,7 +36,7 @@ def words_table(docs: DataFrame, id_col: str = "doc_id",
     family derives from. Factoring it out lets a session tokenize the
     corpus ONCE and feed both the shingle families (LSH / n-gram
     Jaccard) and SimHash (VERDICT r02 #5); see
-    ``corpus.words_from_documents`` for the per-session memo."""
+    ``corpus.words_from_documents`` for the persisted per-query table."""
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     return docs.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
 
@@ -175,7 +175,7 @@ def lsh_near_dup_pairs(docs: DataFrame | None, n_hashes: int = 8,
     IS a unique pair, and the Jaccard verify runs exactly once per pair.
 
     ``words``: optional pre-tokenized (doc_id, _w) frame (e.g. the
-    session-shared ``corpus.words_from_documents``) so sibling dedup
+    persisted ``corpus.words_from_documents``) so sibling dedup
     families don't re-tokenize the corpus. ``shingles_df``/``bands``:
     optional PREBUILT (and caller-persisted) shingle/band tables so a
     caller running several variants (the capped-vs-plain contract

@@ -341,7 +341,7 @@ Tuning notes that mattered at high worker counts:
 
 `python bench.py` (sf0.1 driver tables, local[32]) — one JSON line;
 recorded per-round by the driver as BENCH_r*.json. Per-query numbers are
-best-of-N COLD runs (all cross-query memos reset before every run, so
+best-of-N COLD runs (all tracked persists released before every run, so
 the headline is first-run-comparable across rounds); warm-session times
 are reported separately as `queries_warm`. Every query, the el_stages
 block, the pipeline and the working-set block are bracketed by a fixed

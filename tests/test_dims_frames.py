@@ -104,13 +104,10 @@ def test_el_job_frame_path_matches_dict_path(spark, sf001_dir):
     aliases -> scoring chain through DataFrame dims."""
     import kbspark.jobs as jobs
 
-    jobs._TAGGED_CACHE.clear()
     via_dict = _rows(jobs.entity_linking_job(spark, sf001_dir))
-    jobs._TAGGED_CACHE.clear()
     via_frames = _rows(
         jobs.entity_linking_job(spark, sf001_dir, dim_collect_cap=0)
     )
-    jobs._TAGGED_CACHE.clear()
     assert via_frames == via_dict
     assert len(via_frames) > 0
 
