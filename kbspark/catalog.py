@@ -4,36 +4,43 @@ resume markers**. No Iceberg jars exist in this sandbox; on a real
 cluster this seam is replaced by an Iceberg catalog and
 ``df.writeTo(name).append()`` — the call sites don't change.
 
-Layout: ``<root>/<table>/snap-<n>-<uuid>/part-*.parquet`` plus a
+Layout: ``<root>/<table>/snap-<id>/part-*.parquet`` plus a
 ``_manifest.json`` whose atomic rename IS the commit point: data files
 are invisible until the manifest references them, so a crash mid-write
 leaves no partial state (the WAL/ACID analog of the reference's chunked
 idempotent appends, ner.py:267-304, SURVEY §2.A S4).
+
+Every commit is metadata-only: row counts come from the Parquet footers
+of the files just written (read on the driver with pyarrow), and each
+manifest entry records the written schema, so ``read`` passes it to
+``spark.read.schema`` instead of running a footer-inference job. Entries
+without a recorded schema (older warehouses) still read by inference.
+
+Commits are serialized per table by an exclusive ``flock`` on
+``<table>/_manifest.lock`` held around load -> modify -> replace, and the
+manifest is fsynced (file, then directory) so a power loss cannot leave a
+renamed but empty manifest. A staged snapshot is leased by its writer (a
+shared ``flock`` on ``_stage-*.lease``) until ``release_stage``; the lease
+dies with the writer's process, so ``vacuum_stages`` removes a crashed
+writer's stage but never one another writer is about to commit.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
+import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: characters Spark/Hive escape in partition directory names
 #: (ExternalCatalogUtils.escapePathName): control chars + the listed set.
 _PART_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(0x20)}
-
-
-def part_count_key(v) -> str:
-    """Canonical string key for per-partition row counts: matches the
-    value strings Spark yields when reading partition dirs with type
-    inference DISABLED (round-3 review: inference turned '01' into 1 and
-    the count lookup silently recorded n_rows=0)."""
-    if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
 
 
 def escape_part_value(v) -> str:
@@ -50,6 +57,39 @@ def escape_part_value(v) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _PART_ESCAPE else c for c in s
     )
+
+
+def _footer_rows(directory: str) -> int:
+    """Rows in the Parquet files directly under ``directory``, summed from
+    their footers on the driver (no Spark job)."""
+    return sum(
+        pq.read_metadata(os.path.join(directory, f)).num_rows
+        for f in os.listdir(directory)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _lease_path(stage: str) -> str:
+    """The lease file of the stage directory ``stage``: a sibling whose
+    leading underscore keeps it out of ``stage-*`` listings."""
+    tdir, name = os.path.split(stage)
+    return os.path.join(tdir, f"_{name}.lease")
+
+
+def _reclaim_lease(stage: str) -> bool:
+    """Remove the lease of ``stage`` unless a live writer holds it. True
+    when no live writer leases the stage (also when it has no lease:
+    stages written before leases existed)."""
+    path = _lease_path(stage)
+    if not os.path.exists(path):
+        return True
+    with open(path, "a") as f:
+        try:
+            fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            return False
+        os.remove(path)
+    return True
 
 
 class Catalog:
@@ -75,7 +115,25 @@ class Catalog:
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(entries, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, path)  # atomic on POSIX — the commit point
+        dir_fd = os.open(os.path.dirname(path), os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)  # make the rename itself durable
+        finally:
+            os.close(dir_fd)
+
+    @contextlib.contextmanager
+    def _locked(self, table: str):
+        """Exclusive per-table commit lock. Each call opens its own file
+        description, so the lock excludes other threads of this process
+        as well as other processes."""
+        tdir = os.path.join(self.root, table)
+        os.makedirs(tdir, exist_ok=True)
+        with open(os.path.join(tdir, "_manifest.lock"), "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)
+            yield  # closing the file releases the lock
 
     # -- table ops ----------------------------------------------------------
 
@@ -85,34 +143,32 @@ class Catalog:
     def exists(self, table: str) -> bool:
         return bool(self._load_manifest(table))
 
+    def _write(self, table: str, df: DataFrame, snap_id: str,
+               meta: dict | None) -> dict:
+        """Write ``df`` as snapshot ``snap_id``; returns its (uncommitted)
+        manifest entry with the footer row count and the written schema."""
+        path = os.path.join(self.root, table, snap_id)
+        df.write.mode("errorifexists").parquet(path)
+        return {"snapshot": snap_id, "path": path,
+                "n_rows": _footer_rows(path),
+                "schema": df.schema.jsonValue(), "meta": meta or {}}
+
     def append(self, table: str, df: DataFrame, meta: dict | None = None) -> dict:
         """Write ``df`` as a new snapshot of ``table``; returns the
         committed manifest entry (with row count — the metrics hook)."""
-        tdir = os.path.join(self.root, table)
-        os.makedirs(tdir, exist_ok=True)
-        entries = self._load_manifest(table)
-        snap_id = f"snap-{len(entries):05d}-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(tdir, snap_id)
-        df.write.mode("errorifexists").parquet(path)
-        n_rows = self.spark.read.parquet(path).count()
-        entry = {"snapshot": snap_id, "path": path, "n_rows": n_rows,
-                 "meta": meta or {}}
-        entries.append(entry)
-        self._commit_manifest(table, entries)
+        entry = self._write(table, df, f"snap-{uuid.uuid4().hex[:12]}", meta)
+        with self._locked(table):
+            entries = self._load_manifest(table)
+            entries.append(entry)
+            self._commit_manifest(table, entries)
         return entry
 
     def overwrite(self, table: str, df: DataFrame, meta: dict | None = None) -> dict:
         """Replace the table contents in one atomic manifest swap (old
         snapshots stay on disk until vacuumed — time travel analog)."""
-        tdir = os.path.join(self.root, table)
-        os.makedirs(tdir, exist_ok=True)
-        snap_id = f"snap-ow-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(tdir, snap_id)
-        df.write.mode("errorifexists").parquet(path)
-        n_rows = self.spark.read.parquet(path).count()
-        entry = {"snapshot": snap_id, "path": path, "n_rows": n_rows,
-                 "meta": meta or {}}
-        self._commit_manifest(table, [entry])
+        entry = self._write(table, df, f"snap-ow-{uuid.uuid4().hex[:8]}", meta)
+        with self._locked(table):
+            self._commit_manifest(table, [entry])
         return entry
 
     # -- staged partitioned commits (single-pass lineage) --------------------
@@ -121,35 +177,35 @@ class Catalog:
         """Write ``df`` partitioned by ``part_col`` to an UNCOMMITTED
         staging snapshot in ONE pass (the data files exist but no
         manifest entry references them — invisible until
-        ``commit_staged``). Returns a handle with per-partition row
-        counts (one scan of the staged output, never of the input)."""
-        from pyspark.sql import functions as F
+        ``commit_staged``). Returns a handle holding the stage's lease
+        (end it with ``release_stage``) and per-partition row counts from
+        the written footers, keyed by the partition directory's value."""
+        base = os.path.join(self.root, table, f"stage-{uuid.uuid4().hex[:8]}")
+        with self._locked(table):  # vacuum_stages sees the lease first
+            lease = open(_lease_path(base), "a")
+            fcntl.flock(lease, fcntl.LOCK_SH)
+        staged = {"table": table, "base": base, "part_col": part_col,
+                  "lease": lease, "schema": df.schema.jsonValue()}
+        try:
+            df.write.partitionBy(part_col).mode("errorifexists").parquet(base)
+        except BaseException:
+            self.release_stage(staged)
+            raise
+        prefix = f"{part_col}="
+        staged["counts"] = {
+            d[len(prefix):]: _footer_rows(os.path.join(base, d))
+            for d in os.listdir(base) if d.startswith(prefix)
+        }
+        return staged
 
-        tdir = os.path.join(self.root, table)
-        os.makedirs(tdir, exist_ok=True)
-        base = os.path.join(tdir, f"stage-{uuid.uuid4().hex[:8]}")
-        df.write.partitionBy(part_col).mode("errorifexists").parquet(base)
-        part_dirs = [
-            d for d in os.listdir(base) if d.startswith(f"{part_col}=")
-        ]
-        counts: dict = {}
-        if part_dirs:
-            # type inference OFF so '01' stays '01' — counts are keyed by
-            # the canonical string (part_count_key) on both sides
-            conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-            old_conf = self.spark.conf.get(conf_key, "true")
-            self.spark.conf.set(conf_key, "false")
-            try:
-                staged = self.spark.read.option("basePath", base).parquet(base)
-                for r in (
-                    staged.groupBy(part_col)
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                ):
-                    counts[part_count_key(r[part_col])] = r["n"]
-            finally:
-                self.spark.conf.set(conf_key, old_conf)
-        return {"base": base, "part_col": part_col, "counts": counts}
+    def release_stage(self, staged: dict) -> None:
+        """End the writer's lease on a staged snapshot: from here on
+        ``vacuum_stages`` keeps it only while a manifest entry references
+        it."""
+        with self._locked(staged["table"]):
+            staged["lease"].close()
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(_lease_path(staged["base"]))
 
     def commit_staged(self, table: str, staged: dict, values: list,
                       meta: dict | None = None) -> dict:
@@ -158,27 +214,23 @@ class Catalog:
         directories (zero data movement; the rename of the manifest is
         the commit point, same as ``append``). Empty partitions commit
         as markers with no paths."""
-        part_col = staged["part_col"]
-        paths = []
-        for v in values:
-            p = os.path.join(
-                staged["base"], f"{part_col}={escape_part_value(v)}"
-            )
-            if os.path.isdir(p):
-                paths.append(p)
-        entries = self._load_manifest(table)
-        entry = {
-            "snapshot": f"snap-{len(entries):05d}-{uuid.uuid4().hex[:8]}",
-            "paths": paths,
-            "base_path": staged["base"],
-            "part_col": part_col,
-            "n_rows": int(
-                sum(staged["counts"].get(part_count_key(v), 0) for v in values)
-            ),
-            "meta": meta or {},
-        }
-        entries.append(entry)
-        self._commit_manifest(table, entries)
+        part_col, counts = staged["part_col"], staged["counts"]
+        written = [k for k in map(escape_part_value, values) if k in counts]
+        paths = [os.path.join(staged["base"], f"{part_col}={k}")
+                 for k in written]
+        with self._locked(table):
+            entries = self._load_manifest(table)
+            entry = {
+                "snapshot": f"snap-{len(entries):05d}-{uuid.uuid4().hex[:8]}",
+                "paths": paths,
+                "base_path": staged["base"],
+                "part_col": part_col,
+                "n_rows": sum(counts[k] for k in written),
+                "schema": staged["schema"],
+                "meta": meta or {},
+            }
+            entries.append(entry)
+            self._commit_manifest(table, entries)
         return entry
 
     def write_bucketed(self, table: str, df: DataFrame, bucket_col: str,
@@ -201,38 +253,50 @@ class Catalog:
 
     def vacuum_stages(self, table: str) -> list[str]:
         """Delete staged snapshot directories (``stage-*``) that no
-        manifest entry references — the orphans left when a writer
-        crashes between ``stage_partitioned`` and its ``commit_staged``
-        batches (ADVICE r02: without GC, repeated kill/resume cycles
-        accumulate unreferenced parquet forever). Committed bases are
-        never touched; single-writer per table by design, so a stage dir
-        with no manifest reference at resume time is dead. Returns the
+        manifest entry references and no live writer leases — the orphans
+        left when a writer crashes between ``stage_partitioned`` and its
+        ``commit_staged`` batches (ADVICE r02: without GC, repeated
+        kill/resume cycles accumulate unreferenced parquet forever).
+        Committed bases are never touched. Runs under the commit lock, so
+        it cannot race a lease being taken or a commit. Returns the
         removed paths."""
-        import shutil
-
         tdir = os.path.join(self.root, table)
         if not os.path.isdir(tdir):
             return []
-        referenced = {
-            e["base_path"] for e in self._load_manifest(table)
-            if "base_path" in e
-        }
         removed = []
-        for d in os.listdir(tdir):
-            path = os.path.join(tdir, d)
-            if (
-                d.startswith("stage-")
-                and os.path.isdir(path)
-                and path not in referenced
-            ):
-                shutil.rmtree(path)
-                removed.append(path)
+        with self._locked(table):
+            referenced = {
+                e["base_path"] for e in self._load_manifest(table)
+                if "base_path" in e
+            }
+            stages = {
+                d.removeprefix("_").removesuffix(".lease")
+                for d in os.listdir(tdir)
+                if d.startswith(("stage-", "_stage-"))
+            }
+            for name in sorted(stages):
+                path = os.path.join(tdir, name)
+                if (
+                    _reclaim_lease(path)
+                    and path not in referenced
+                    and os.path.isdir(path)
+                ):
+                    shutil.rmtree(path)
+                    removed.append(path)
         return removed
 
     def read(self, table: str) -> DataFrame:
         entries = self._load_manifest(table)
         if not entries:
             raise FileNotFoundError(f"catalog table not found: {table}")
+
+        def reader(e):
+            # the recorded schema spares a footer-inference job; entries
+            # committed before schemas were recorded still infer theirs
+            if "schema" not in e:
+                return self.spark.read
+            return self.spark.read.schema(StructType.fromJson(e["schema"]))
+
         dfs = []
         # one DataFrame per plain SNAPSHOT (not one multi-path read):
         # spark.read.parquet(*paths) silently picks one file's schema
@@ -241,7 +305,7 @@ class Catalog:
         # reads route every snapshot pair through the strict unionByName
         for e in entries:
             if "path" in e:
-                dfs.append(self.spark.read.parquet(e["path"]))
+                dfs.append(reader(e).parquet(e["path"]))
         # staged-partition entries are read PER ENTRY (ADVICE r05: the
         # earlier per-base grouping merged all staged snapshots sharing
         # one base into a single multi-path read, so data-column drift
@@ -258,7 +322,7 @@ class Catalog:
                     or os.path.basename(e["paths"][0]).split("=", 1)[0]
                 )
                 dfs.append(
-                    self.spark.read.option(
+                    reader(e).option(
                         "basePath", e["base_path"]
                     ).parquet(*e["paths"])
                 )

@@ -15,13 +15,20 @@ Tables (reference analogs):
                    src_url), bucket-partitioned, resumable
 
 The triples stage runs through ``lineage.run_stage`` (bucketed by url,
-atomic manifest commits) — kill/rerun resumes exactly. The three
-dimension tables are snapshot-overwritten (small, deterministic).
+atomic manifest commits) — kill/rerun resumes exactly. The four tables
+are then snapshot-overwritten (deterministic): each overwrite is an
+independent per-table atomic swap, so the four are submitted at once
+from threads and run as concurrent Spark jobs. The default FIFO
+scheduler already hands idle cores to the later jobs; no scheduler pool,
+conf or option is involved.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from kbspark.apriori import attach_probs
 from kbspark.catalog import Catalog
@@ -104,10 +111,15 @@ def build_knowledge_base(
         fail_after_commits=fail_after_commits,
     )
 
-    # --- dimension snapshots (small, overwrite) --------------------------
-    from kbspark.triples import entity_triples, redirect_triples
+    # --- snapshots (independent per-table atomic swaps, concurrent) -------
+    from kbspark.triples import (
+        entity_triples,
+        redirect_alias_frame,
+        redirect_triples,
+    )
 
-    links = cat.read("triples_mentions").select(
+    mention_triples_df = cat.read("triples_mentions")
+    links = mention_triples_df.select(
         F.col("obj").alias("QID"), "n_occurrences"
     )
     # a-priori proba per entity from the materialized mention triples
@@ -124,48 +136,33 @@ def build_knowledge_base(
         weight_col="n_occurrences",
         probs_hint="broadcast" if dims is not None else "auto",
     )
-    cat.overwrite(
-        "entities",
-        ent_with_proba.select("page_title", "QID", "TYPE", "proba", "n_links"),
-        meta={"stage": "entities"},
-    )
-
-    from kbspark.triples import redirect_alias_frame
 
     own = dim.select(
         F.col("page_title").alias("alias"), "page_title", "QID", "TYPE"
     )
     if dims is None:
+        from kbspark.triples import redirect_triples_frame
+
         red = redirect_alias_frame(spark, dim, redirect_dim=redirect_dim)
+        red_triples = redirect_triples_frame(redirect_dim)
     else:
         red = redirect_alias_frame(
             spark, dim, redirect_targets=redirect_targets
         )
-    cat.overwrite(
-        "aliases", own.unionByName(red).distinct(), meta={"stage": "aliases"}
-    )
-
-    sitelinks = (
-        cat.read("triples_mentions")
-        .select(F.col("obj").alias("QID"), F.col("src_url").alias("url"))
-        .distinct()
-    )
-    cat.overwrite("sitelinks", sitelinks, meta={"stage": "sitelinks"})
-
-    if dims is None:
-        from kbspark.triples import redirect_triples_frame
-
-        red_triples = redirect_triples_frame(redirect_dim)
-    else:
         red_triples = redirect_triples(spark, redirect_targets)
-    cat.overwrite(
-        "triples",
-        cat.read("triples_mentions")
-        .select("subj", "pred", "obj", "n_occurrences", "src_url")
-        .unionByName(entity_triples(dim))
-        .unionByName(red_triples),
-        meta={"stage": "triples"},
-    )
+
+    _overwrite_concurrently(cat, {
+        "entities": ent_with_proba.select(
+            "page_title", "QID", "TYPE", "proba", "n_links"
+        ),
+        "aliases": own.unionByName(red).distinct(),
+        "sitelinks": mention_triples_df.select(
+            F.col("obj").alias("QID"), F.col("src_url").alias("url")
+        ).distinct(),
+        "triples": mention_triples_df.select(
+            "subj", "pred", "obj", "n_occurrences", "src_url"
+        ).unionByName(entity_triples(dim)).unionByName(red_triples),
+    })
 
     return {
         "stage": stage_result,
@@ -175,3 +172,20 @@ def build_knowledge_base(
             for t in ("entities", "aliases", "sitelinks", "triples")
         },
     }
+
+
+def _overwrite_concurrently(cat: Catalog, snapshots: dict) -> None:
+    """Overwrite each table with its frame, one thread per table. The
+    threads inherit the caller's job group, description and job tags; the
+    first failure (in ``snapshots`` order) is re-raised once all have
+    joined."""
+    with ThreadPoolExecutor(len(snapshots)) as pool:
+        futures = [
+            # one wrapper per thread: each gets its own copy of the
+            # caller's local properties
+            pool.submit(inheritable_thread_target(cat.spark)(cat.overwrite),
+                        table, df, meta={"stage": table})
+            for table, df in snapshots.items()
+        ]
+    for f in futures:
+        f.result()

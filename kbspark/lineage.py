@@ -98,16 +98,21 @@ def run_stage(
             "_bucket", bucket_of(key_col, n_buckets)
         )
         staged = catalog.stage_partitioned(output_table, out, "_bucket")
-        for i in range(0, len(pending), buckets_per_commit):
-            batch = pending[i : i + buckets_per_commit]
-            catalog.commit_staged(
-                output_table, staged, batch,
-                meta={"stage": stage, "buckets": batch},
-            )
-            ran.extend(batch)
-            commits += 1
-            if fail_after_commits is not None and commits >= fail_after_commits:
-                raise RuntimeError(
-                    f"fault injection: killed after {commits} commits"
+        try:
+            for i in range(0, len(pending), buckets_per_commit):
+                batch = pending[i : i + buckets_per_commit]
+                catalog.commit_staged(
+                    output_table, staged, batch,
+                    meta={"stage": stage, "buckets": batch},
                 )
+                ran.extend(batch)
+                commits += 1
+                if (fail_after_commits is not None
+                        and commits >= fail_after_commits):
+                    raise RuntimeError(
+                        f"fault injection: killed after {commits} commits"
+                    )
+        finally:
+            # a killed writer's lease dies with its process; end it here
+            catalog.release_stage(staged)
     return {"ran": ran, "skipped": sorted(done), "commits": commits}

@@ -104,10 +104,16 @@ def test_reset_memos_releases_every_persist(spark, sf001_dir, tmp_path):
     tables behind; ``reset_memos`` releases all of them."""
     reset_memos()
     jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    # compared by RDD id, not by count: Spark holds persisted RDDs weakly,
+    # so ones earlier tests left unreferenced can vanish mid-test
+    before = persisted()
     jobs.entity_linking_job(spark, sf001_dir, dim_collect_cap=0).count()
     kb.build_knowledge_base(spark, sf001_dir, str(tmp_path / "wh"),
                             n_buckets=2, dim_collect_cap=0)
-    assert jsc.getPersistentRDDs().size() > before
+    assert persisted() - before
     reset_memos()
-    assert jsc.getPersistentRDDs().size() == before
+    assert persisted() - before == set()

@@ -96,3 +96,51 @@ def test_dedup_job_families(spark, tmp_path, sf001_dir):
     assert Catalog(spark, str(tmp_path / "wh")).read(
         "dedup_minhash-lsh"
     ).count() == len(lsh_pairs)
+
+
+_KB_TABLES = ("entities", "aliases", "sitelinks", "triples")
+
+
+def _table_rows(spark, warehouse):
+    """Every KB table as sorted rows, doubles rounded to 9 places (the
+    a-priori proba sums floats in a plan-dependent order)."""
+    cat = Catalog(spark, warehouse)
+    out = {}
+    for t in _KB_TABLES:
+        df = cat.read(t)
+        df = df.select(*[F.round(c, 9).alias(c) if ty == "double" else c
+                         for c, ty in df.dtypes])
+        out[t] = sorted(map(tuple, df.collect()), key=repr)
+    return out
+
+
+def test_kb_snapshot_failure_propagates_and_rerun_matches(
+        spark, sf001_dir, tmp_path, monkeypatch):
+    """The four snapshot overwrites run in threads: a failure in one
+    (``aliases``) must surface from build_knowledge_base after the others
+    finished, and the rerun must produce all four tables equal to an
+    uninterrupted build."""
+    wh_ref = str(tmp_path / "ref")
+    build_knowledge_base(spark, sf001_dir, wh_ref, n_buckets=8)
+    expected = _table_rows(spark, wh_ref)
+
+    overwrite = Catalog.overwrite
+
+    def failing_overwrite(self, table, df, meta=None):
+        if table == "aliases":
+            raise RuntimeError("injected snapshot failure")
+        return overwrite(self, table, df, meta)
+
+    wh = str(tmp_path / "wh")
+    monkeypatch.setattr(Catalog, "overwrite", failing_overwrite)
+    with pytest.raises(RuntimeError, match="injected snapshot failure"):
+        build_knowledge_base(spark, sf001_dir, wh, n_buckets=8)
+    monkeypatch.undo()
+    cat = Catalog(spark, wh)
+    assert not cat.exists("aliases")
+    assert all(cat.exists(t) for t in ("entities", "sitelinks", "triples"))
+
+    res = build_knowledge_base(spark, sf001_dir, wh, n_buckets=8)
+    assert res["stage"]["ran"] == []  # the triple buckets were committed
+    assert _table_rows(spark, wh) == expected
+    assert res["tables"] == {t: len(rows) for t, rows in expected.items()}
