@@ -697,63 +697,18 @@ def resolve_mentions_frames(raw_mentions, entity_dim, redirect_dim,
     )
 
 
-TARGETS_SCHEMA = "url string, _target string"
-
-
-def link_target_stage(pages_df, text_col: str = "text",
-                      already_clean: bool = False):
-    """(url, raw link target) pairs, deduplicated IN-BATCH per page —
-    the narrow front half of the frame-dim annotate path. A page lives
-    entirely inside one Arrow batch, so the per-page ``set()`` makes the
-    output globally unique: no distinct() shuffle downstream, and the
-    batch never materializes surfaces/positions it doesn't need."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, targets = [], []
-            for url, raw in zip(pdf["url"], pdf[text_col]):
-                seen = set()
-                cleaned = raw if already_clean else clean_text(raw)
-                for m in _WIKILINK.finditer(cleaned):
-                    title = _raw_target(m)
-                    if title not in seen:
-                        seen.add(title)
-                        urls.append(url)
-                        targets.append(title)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "_target": pd.Series(targets, dtype="object"),
-                }
-            )
-
-    return pages_df.select("url", text_col).mapInPandas(
-        run, schema=TARGETS_SCHEMA
-    )
-
-
-def page_link_maps(pages_df, spark, entity_dim, redirect_dim,
-                   text_col: str = "text", broadcast_dims: bool = True,
-                   already_clean: bool = False, targets=None):
+def page_link_maps(targets, entity_dim, redirect_dim, broadcast_dims: bool):
     """Per-page resolution maps for the frame-dim annotate path: the
-    DISTINCT raw link targets of every page are resolved by relational
-    joins (``_with_resolved_frames``), then folded back into one small
+    DISTINCT raw link targets of every page (``targets``: (url, _target),
+    distinct per page) are resolved by relational joins
+    (``_with_resolved_frames``), then folded back into one small
     ``map<target, (title, type)>`` per page. Shuffle volume is bounded
     by the number of distinct (page, target) pairs — links per page are
     O(100), so the per-page map is tiny regardless of corpus size and
     the dictionary itself never reaches the driver or the workers as a
-    whole object. The only shuffle is the final per-page fold
-    (``link_target_stage`` dedups in-batch).
-
-    ``targets``: optional pre-extracted (url, _target) frame (distinct
-    per page) — ``annotate_stage_frames`` passes the targets its clean
-    pass already scanned so no second python hop re-reads the pages."""
+    whole object. The only shuffle is the final per-page fold."""
     from pyspark.sql import functions as F
 
-    if targets is None:
-        targets = link_target_stage(
-            pages_df, text_col=text_col, already_clean=already_clean
-        )
     resolved = _with_resolved_frames(
         targets, "_target", entity_dim, redirect_dim, broadcast_dims
     )
@@ -796,12 +751,12 @@ def annotate_stage_frames(pages_df, spark, entity_dim, redirect_dim,
     # E1 runs ONCE per page (round-3 review: the target scan and the
     # annotate pass each ran the full clean_text cascade — 2x the
     # dominant extraction cost), and the SAME python pass extracts each
-    # page's distinct raw link targets (r06, guide §4.1): the separate
-    # link_target_stage hop shipped every cleaned page through Arrow to
-    # python a second time just to re-run the wikilink finditer the
-    # annotate pass runs anyway. One narrow stage cleans + scans targets
-    # while carrying the annotate columns; both consumers read the
-    # persisted result.
+    # page's distinct raw link targets (r06, guide §4.1): a separate
+    # target hop would ship every cleaned page through Arrow to python a
+    # second time just to re-run the wikilink finditer the annotate pass
+    # runs anyway. One narrow stage cleans + scans targets while
+    # carrying the annotate columns; both consumers read the persisted
+    # result.
     cols = ["url"]
     if title_col != "url":
         cols.append(title_col)
@@ -815,7 +770,8 @@ def annotate_stage_frames(pages_df, spark, entity_dim, redirect_dim,
             cleaned = pdf[text_col].map(clean_text)
             out["_cleaned"] = cleaned
             # dict.fromkeys = in-batch dedup preserving first-occurrence
-            # order, exactly like link_target_stage's seen-set loop
+            # order; a page lives in one batch, so targets are distinct
+            # per page with no distinct() shuffle
             out["_targets"] = [
                 list(
                     dict.fromkeys(
@@ -835,10 +791,7 @@ def annotate_stage_frames(pages_df, spark, entity_dim, redirect_dim,
     )
 
     targets = cleaned.select("url", F.explode("_targets").alias("_target"))
-    maps = page_link_maps(
-        cleaned, spark, entity_dim, redirect_dim,
-        broadcast_dims=broadcast_dims, targets=targets,
-    )
+    maps = page_link_maps(targets, entity_dim, redirect_dim, broadcast_dims)
     # NO re-spread before the tokenize pass (r06 final): the maps side
     # is per-page metadata — small relative to the text it describes —
     # so the planner/AQE broadcasts it and the join PRESERVES the

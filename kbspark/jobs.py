@@ -21,32 +21,20 @@ if _PKG_PARENT not in sys.path:
 from pyspark.sql import DataFrame, SparkSession
 
 from kbspark.corpus import (
+    Dims,
     dim_frames_from_documents,
     pages_from_documents,
     try_dims_from_documents,
 )
-from kbspark.extract import (
-    annotate_stage,
-    annotate_stage_frames,
-    mention_stage,
-    mention_stage_raw,
-    resolve_mentions_frames,
-)
 from kbspark.session import persist_tracked, pin_session_conf
-from kbspark.triples import build_triples, build_triples_from_frames
+from kbspark.triples import build_triples_from_frames
 
 
 def flagship_triples(spark: SparkSession, sf_dir: str,
                      dim_collect_cap: int | None = None,
                      pages_df: DataFrame | None = None) -> DataFrame:
-    """documents → pages → mentions → triples.
-
-    Dim strategy is size-gated: a dictionary-sized vocabulary collects to
-    broadcast dicts (in-batch J5 probe, zero extra joins — the reference's
-    worker-dict shape, ner.py:292-293); above the cap nothing is collected
-    and J5 resolves via DataFrame dim joins (``resolve_mentions_frames``)
-    — the 100-TB path where the corpus-derived dictionary is itself big
-    data.
+    """documents → pages → mentions → triples. The dims follow
+    ``corpus.Dims`` (size-gated by ``dim_collect_cap``).
 
     ``pages_df`` overrides the corpus (dims still derive from ``sf_dir``)
     — the working-set stress harness feeds a replicated corpus through
@@ -55,73 +43,54 @@ def flagship_triples(spark: SparkSession, sf_dir: str,
     pages = pages_df if pages_df is not None else pages_from_documents(
         spark, sf_dir
     )
-    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
-    if frames is not None:
-        entity_dim, redirect_dim = frames
-        raw = mention_stage_raw(pages, spark)
-        # dims here are corpus-scaling by definition — never force a
-        # broadcast; the planner/AQE picks (round-3 review finding)
-        mentions = resolve_mentions_frames(
-            raw, entity_dim, redirect_dim, broadcast_dims=False
-        )
-        return build_triples_from_frames(mentions, entity_dim, redirect_dim)
-    entity_types, redirect_targets = dicts
-    mentions = mention_stage(pages, spark, entity_types, redirect_targets)
-    return build_triples(spark, mentions, entity_types, redirect_targets)
+    dims = _job_dims(spark, sf_dir, dim_collect_cap)
+    return build_triples_from_frames(
+        dims.mentions(pages), dims.entity, dims.redirect,
+        broadcast_dim=dims.broadcast,
+    )
 
 
 def _job_dims(spark: SparkSession, sf_dir: str,
-              dim_collect_cap: int | None):
-    """A job's dims, derived once and passed down: ``(dicts, None)`` when
-    the vocabulary collects under the cap (``try_dims_from_documents``),
-    else ``(None, (entity_dim, redirect_dim))`` as DataFrames."""
+              dim_collect_cap: int | None) -> Dims:
+    """A job's dims, derived once and passed down: collected when the
+    vocabulary fits under the cap (``try_dims_from_documents``), else
+    DataFrames (``dim_frames_from_documents``)."""
     kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
     dicts = try_dims_from_documents(spark, sf_dir, **kw)
-    if dicts is not None:
-        return dicts, None
-    return None, dim_frames_from_documents(spark, sf_dir)
+    if dicts is None:
+        return Dims(*dim_frames_from_documents(spark, sf_dir))
+    return Dims.collected(spark, *dicts)
 
 
 def tagged_table(spark: SparkSession, sf_dir: str,
                  dim_collect_cap: int | None = None,
                  pages_df: DataFrame | None = None) -> DataFrame:
     """documents → pages → per-sentence BIO-tagged table (the reference's
-    `tagged` table with typed nested arrays, ner.py:196-197).
-
-    Dim strategy is size-gated like the flagship (VERDICT r02 #2): a
-    dictionary-sized vocabulary annotates with broadcast dicts; above the
-    cap nothing is collected and each page resolves its links through a
-    per-page map built by relational joins (``annotate_stage_frames``).
+    `tagged` table with typed nested arrays, ner.py:196-197). The dims
+    follow ``corpus.Dims`` (size-gated by ``dim_collect_cap``).
 
     ``pages_df`` overrides the corpus (dims still derive from ``sf_dir``)."""
     pin_session_conf(spark)
-    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
-    return _tagged_table(spark, sf_dir, dicts, frames, pages_df)
+    dims = _job_dims(spark, sf_dir, dim_collect_cap)
+    return _tagged_table(spark, sf_dir, dims, pages_df)
 
 
-def _tagged_table(spark: SparkSession, sf_dir: str, dicts, frames,
+def _tagged_table(spark: SparkSession, sf_dir: str, dims: Dims,
                   pages_df: DataFrame | None) -> DataFrame:
     """``tagged_table`` over dims the caller already resolved
     (``_job_dims``). The tagged table of the corpus itself is persisted
     through ``persist_tracked`` — like the reference's table, written
     once (ner.py:267-288) and read by every consumer; an overridden
     ``pages_df`` is left to its caller."""
-    # frames chain: leave the scan serial — the chain is many small
-    # stages and wide fan-out costs more in scheduling than its python
-    # passes gain (see pages_from_documents docstring); the tokenize pass
-    # inherits the cleaned side's partitioning through the broadcast maps
-    # join (annotate_stage_frames)
+    # the scan is spread only for collected dims. The frames chain is
+    # many small stages, and wide fan-out costs more in scheduling than
+    # its python passes gain (see pages_from_documents docstring); its
+    # tokenize pass inherits the cleaned side's partitioning through the
+    # broadcast maps join (annotate_stage_frames)
     pages = pages_df if pages_df is not None else pages_from_documents(
-        spark, sf_dir, spread=frames is None
+        spark, sf_dir, spread=dims.broadcast
     )
-    if frames is not None:
-        entity_dim, redirect_dim = frames
-        tagged = annotate_stage_frames(
-            pages, spark, entity_dim, redirect_dim, broadcast_dims=False
-        )
-    else:
-        entity_types, redirect_targets = dicts
-        tagged = annotate_stage(pages, spark, entity_types, redirect_targets)
+    tagged = dims.tagged(pages)
     if pages_df is not None:
         return tagged
     return persist_tracked(tagged)
@@ -133,12 +102,8 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
     """Full native EL pipeline (the reference's batchel-wp trace, §3.3,
     minus the HTTP boundaries): tagged table → mention spans (E9) →
     alias dictionary (titles + redirects + corpus-mined anchor texts,
-    E8) → scored + ranked candidates with sentinel rows (E10).
-
-    Size-gated dims (VERDICT r02 #2): under the cap the alias dictionary
-    derives from collected dicts (broadcast-friendly); above it both the
-    tagged table and the alias frames come from DataFrame dims — no
-    driver collect, no forced broadcasts, AQE picks the join strategies."""
+    E8) → scored + ranked candidates with sentinel rows (E10). The dims
+    follow ``corpus.Dims`` (size-gated by ``dim_collect_cap``)."""
     from pyspark.sql import functions as F
 
     from kbspark.linking import (
@@ -147,11 +112,11 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
         mention_spans_sql,
         mine_anchor_aliases,
     )
-    from kbspark.triples import entity_dim_df
+    from kbspark.triples import redirect_alias_frame
 
     pin_session_conf(spark)
-    dicts, frames = _job_dims(spark, sf_dir, dim_collect_cap)
-    tagged = _tagged_table(spark, sf_dir, dicts, frames, pages_df)
+    dims = _job_dims(spark, sf_dir, dim_collect_cap)
+    tagged = _tagged_table(spark, sf_dir, dims, pages_df)
     # one full-corpus extraction pass: spans feed BOTH candidate mining
     # (surface->gt pairs) and linking — no second mention_stage scan
     # JVM span extraction (mention_spans_sql): value-identical to the
@@ -160,29 +125,16 @@ def entity_linking_job(spark: SparkSession, sf_dir: str,
     # working set, and it removes EL's second python stage entirely
     spans = persist_tracked(mention_spans_sql(tagged))
 
-    from kbspark.triples import redirect_alias_frame
-
-    if frames is not None:
-        # frame path: dims are themselves big data
-        dim, redirect_dim = frames
-        red = redirect_alias_frame(
-            spark, dim, redirect_dim=redirect_dim, proba=0.0
-        )
-        dim_hint = "auto"
-    else:
-        entity_types, redirect_targets = dicts
-        dim = entity_dim_df(spark, entity_types)
-        red = redirect_alias_frame(
-            spark, dim, redirect_targets=redirect_targets, proba=0.0
-        )
-        dim_hint = "broadcast"
+    red = redirect_alias_frame(
+        spark, dims.entity, redirect_dim=dims.redirect, proba=0.0
+    )
     # mined dictionary is corpus-scaling: cap targets per surface and let
     # the planner pick broadcast-vs-shuffle for the EL join (VERDICT #6)
     mined = mine_anchor_aliases(
-        spans, dim, target_col="gt", max_targets_per_surface=8,
-        dim_hint=dim_hint,
+        spans, dims.entity, target_col="gt", max_targets_per_surface=8,
+        dim_hint=dims.hint,
     )
-    own = dim.select(
+    own = dims.entity.select(
         F.col("page_title").alias("alias"), "page_title", "QID", "TYPE",
         F.lit(0.0).alias("proba"),
     )

@@ -33,16 +33,11 @@ from pyspark.util import inheritable_thread_target
 from kbspark.apriori import attach_probs
 from kbspark.catalog import Catalog
 from kbspark.corpus import (
+    Dims,
     dim_frames_from_documents,
     pages_from_documents,
     try_dims_from_documents,
 )
-from kbspark.extract import (
-    mention_stage,
-    mention_stage_raw,
-    resolve_mentions_frames,
-)
-from kbspark.triples import entity_dim_df
 from kbspark.lineage import run_stage, stage_metrics
 
 
@@ -57,25 +52,18 @@ def build_knowledge_base(
     """End-to-end KB build into ``warehouse``; returns metrics summary.
 
     Idempotent: a second call skips completed triple buckets (resume) and
-    refreshes the dimension snapshots deterministically.
-
-    Dim strategy is size-gated like the flagship (VERDICT r02 #2): a
-    dictionary-sized vocabulary runs the broadcast-dict extract; above
-    the cap nothing collects and every dictionary consumer (mention
-    resolution, a-priori join, aliases, redirect triples) switches to
-    DataFrame dims with planner-chosen join strategies.
+    refreshes the dimension snapshots deterministically. The dims follow
+    ``corpus.Dims`` (size-gated by ``dim_collect_cap``).
     """
     cat = Catalog(spark, warehouse)
     kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
-    dims = try_dims_from_documents(spark, sf_dir, **kw)
+    dicts = try_dims_from_documents(spark, sf_dir, **kw)
     pages = pages_from_documents(spark, sf_dir)
-
-    if dims is None:
-        entity_dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
-        dim = entity_dim.select("page_title", "TYPE", "QID")
+    if dicts is None:
+        dims = Dims(*dim_frames_from_documents(spark, sf_dir))
     else:
-        entity_types, redirect_targets = dims
-        dim = entity_dim_df(spark, entity_types)
+        dims = Dims.collected(spark, *dicts)
+    dim = dims.entity
 
     # --- triples (big, resumable) ---------------------------------------
     # mention triples run per bucket (aggregation keys are url-local, so
@@ -84,17 +72,9 @@ def build_knowledge_base(
     from kbspark.triples import mention_triples
 
     def mention_transform(pages_part: DataFrame) -> DataFrame:
-        if dims is None:
-            raw = mention_stage_raw(pages_part, spark)
-            mentions = resolve_mentions_frames(
-                raw, entity_dim, redirect_dim, broadcast_dims=False
-            )
-            mt = mention_triples(mentions, dim, broadcast_dim=False)
-        else:
-            mentions = mention_stage(
-                pages_part, spark, entity_types, redirect_targets
-            )
-            mt = mention_triples(mentions, dim)
+        mt = mention_triples(
+            dims.mentions(pages_part), dim, broadcast_dim=dims.broadcast
+        )
         return mt.select(
             "subj", "pred", "obj", "n_occurrences", "src_url",
             F.col("subj").alias("url"),  # lineage bucket key
@@ -115,7 +95,7 @@ def build_knowledge_base(
     from kbspark.triples import (
         entity_triples,
         redirect_alias_frame,
-        redirect_triples,
+        redirect_triples_frame,
     )
 
     mention_triples_df = cat.read("triples_mentions")
@@ -126,30 +106,22 @@ def build_knowledge_base(
     # (A2), weighted by occurrence counts — the reference counts link
     # occurrences, not distinct pages (entities.py:330)
     qid_map = dim.select("QID", "page_title")
-    if dims is not None:
-        qid_map = F.broadcast(qid_map)  # dictionary-sized; frames -> AQE
+    # dictionary-sized when collected; frames -> AQE
+    qid_map = F.broadcast(qid_map) if dims.broadcast else qid_map
     ent_with_proba = attach_probs(
         dim,
         links.join(qid_map, "QID").select(
             F.col("page_title").alias("target"), "n_occurrences"
         ),
         weight_col="n_occurrences",
-        probs_hint="broadcast" if dims is not None else "auto",
+        probs_hint=dims.hint,
     )
 
     own = dim.select(
         F.col("page_title").alias("alias"), "page_title", "QID", "TYPE"
     )
-    if dims is None:
-        from kbspark.triples import redirect_triples_frame
-
-        red = redirect_alias_frame(spark, dim, redirect_dim=redirect_dim)
-        red_triples = redirect_triples_frame(redirect_dim)
-    else:
-        red = redirect_alias_frame(
-            spark, dim, redirect_targets=redirect_targets
-        )
-        red_triples = redirect_triples(spark, redirect_targets)
+    red = redirect_alias_frame(spark, dim, redirect_dim=dims.redirect)
+    red_triples = redirect_triples_frame(dims.redirect)
 
     _overwrite_concurrently(cat, {
         "entities": ent_with_proba.select(

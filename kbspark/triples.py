@@ -114,20 +114,9 @@ def entity_triples(entity_dim: DataFrame) -> DataFrame:
     )
 
 
-def redirect_triples(spark, redirect_targets: dict[str, str]) -> DataFrame:
-    """(alias, 'redirects_to', target) per redirect edge."""
-    return _dict_frame(spark, redirect_targets, "subj", "obj").select(
-        "subj",
-        F.lit("redirects_to").alias("pred"),
-        "obj",
-        F.lit(1).cast("long").alias("n_occurrences"),
-        F.col("subj").alias("src_url"),
-    )
-
-
 def redirect_triples_frame(redirect_dim: DataFrame) -> DataFrame:
-    """(alias, 'redirects_to', target) from a DataFrame redirect dim
-    (alias, page_title) — the no-collect analog of ``redirect_triples``."""
+    """(alias, 'redirects_to', target) per edge of the redirect dim
+    (alias, page_title)."""
     return redirect_dim.select(
         F.col("alias").alias("subj"),
         F.lit("redirects_to").alias("pred"),
@@ -141,13 +130,16 @@ def build_triples_from_frames(
     mentions: DataFrame,
     entity_dim: DataFrame,
     redirect_dim: DataFrame,
+    broadcast_dim: bool = False,
 ) -> DataFrame:
-    """``build_triples`` for DataFrame dims (the 100-TB flagship path —
-    nothing dictionary-shaped ever reaches the driver). ``entity_dim``
-    must carry (page_title, TYPE, QID); ``redirect_dim`` (alias,
-    page_title)."""
+    """Union of all triple families, one row per (subj, pred, obj).
+    ``entity_dim`` must carry (page_title, TYPE, QID); ``redirect_dim``
+    (alias, page_title). ``broadcast_dim`` forces the mention join to
+    broadcast the entity dim (dictionary-sized, collected dims); the
+    default lets the planner pick (the 100-TB path, nothing
+    dictionary-shaped ever reaches the driver)."""
     dim = entity_dim.select("page_title", "TYPE", "QID")
-    out = mention_triples(mentions, dim, broadcast_dim=False)
+    out = mention_triples(mentions, dim, broadcast_dim=broadcast_dim)
     out = out.unionByName(entity_triples(dim))
     out = out.unionByName(redirect_triples_frame(redirect_dim))
     return out.select("subj", "pred", "obj", "n_occurrences", "src_url")
@@ -159,14 +151,9 @@ def build_triples(
     entity_types: dict[str, str],
     redirect_targets: dict[str, str],
 ) -> DataFrame:
-    """Union of all triple families, one row per (subj, pred, obj)."""
-    dim = entity_dim_df(spark, entity_types)
-    parts = [
-        mention_triples(mentions, dim),
-        entity_triples(dim),
-        redirect_triples(spark, redirect_targets),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("subj", "pred", "obj", "n_occurrences", "src_url")
+    """``build_triples_from_frames`` over collected dims."""
+    return build_triples_from_frames(
+        mentions, entity_dim_df(spark, entity_types),
+        _dict_frame(spark, redirect_targets, "alias", "page_title"),
+        broadcast_dim=True,
+    )

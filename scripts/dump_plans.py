@@ -2,6 +2,9 @@
 """Dump .explain('formatted') for every headline bench query to
 plans/<tag>/<query>_<suffix>.txt (judge-checkable plan evidence).
 
+Expression IDs (``#123``) are written as ``#``, so two dumps of the same
+plan are byte-equal and two trees' dumps can be compared with ``cmp``.
+
 Usage: python scripts/dump_plans.py <tag> <suffix> [query ...]
 e.g.   python scripts/dump_plans.py r06 before
 """
@@ -9,6 +12,7 @@ e.g.   python scripts/dump_plans.py r06 before
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -30,11 +34,14 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from kbspark.corpus import words_from_documents
-    from kbspark.jobs import entity_linking_job
+    from kbspark.jobs import entity_linking_job, tagged_table
     from kbspark.textops import lsh_near_dup_pairs, simhash_near_dups
 
     queries = dict(entry_mod.queries())
     queries["kg_el_frames"] = lambda sp, sf: entity_linking_job(
+        sp, sf, dim_collect_cap=1
+    )
+    queries["kg_tagged_frames"] = lambda sp, sf: tagged_table(
         sp, sf, dim_collect_cap=1
     )
     queries["t_lsh_near_dup_pairs"] = lambda sp, sf: lsh_near_dup_pairs(
@@ -48,8 +55,8 @@ def main() -> None:
 
     headline = [
         "kg_triples", "kg_triples_dimframes", "kg_entity_linking",
-        "kg_el_frames", "kg_tagged_stats", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_local_supplier", "a2_apriori_salted",
+        "kg_el_frames", "kg_tagged_stats", "kg_tagged_frames",
+        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier", "a2_apriori_salted",
         "a1_graph_closure", "t_lsh_near_dup_pairs", "t_simhash_near_dups",
         "s_knn_bruteforce", "w_windows",
     ]
@@ -63,6 +70,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        plan = re.sub(r"#\d+", "#", plan)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

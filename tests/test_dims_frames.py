@@ -6,6 +6,8 @@ dict/broadcast path."""
 import pytest
 from pyspark.sql import functions as F
 
+import kbspark.jobs as jobs
+
 from kbspark.corpus import (
     dim_frames_from_documents,
     dims_from_documents,
@@ -16,19 +18,26 @@ from kbspark.extract import (
     mention_stage_raw,
     resolve_mentions_frames,
 )
-from kbspark.jobs import flagship_triples
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_frame_path_matches_dict_path(spark, sf001_dir):
-    """Force the frame path with a tiny cap; triples must be identical."""
-    dict_out = _rows(flagship_triples(spark, sf001_dir))
-    frame_out = _rows(flagship_triples(spark, sf001_dir, dim_collect_cap=3))
-    assert frame_out == dict_out
-    assert len(frame_out) > 0
+@pytest.mark.parametrize(
+    "job,cap",
+    [("flagship_triples", 3), ("entity_linking_job", 0), ("tagged_table", 0)],
+)
+def test_job_frame_path_matches_dict_path(spark, sf001_dir, job, cap):
+    """Each job forced onto the frame path with a tiny cap must emit
+    exactly its dict-path table: the triples, the whole tagged -> spans
+    -> aliases -> scoring EL chain, and the tagged table (serial scan,
+    persisted) through DataFrame dims."""
+    via_dict = _rows(getattr(jobs, job)(spark, sf001_dir))
+    via_frames = _rows(getattr(jobs, job)(spark, sf001_dir,
+                                          dim_collect_cap=cap))
+    assert via_frames == via_dict
+    assert len(via_frames) > 0
 
 
 def test_resolution_precedence_matches_resolve_title(spark, sf001_dir):
@@ -93,20 +102,6 @@ def test_annotate_frames_matches_dict_path(spark, sf001_dir):
     )
     via_frames = _rows(
         annotate_stage_frames(pages, spark, ent, red, broadcast_dims=False)
-    )
-    assert via_frames == via_dict
-    assert len(via_frames) > 0
-
-
-def test_el_job_frame_path_matches_dict_path(spark, sf001_dir):
-    """entity_linking_job forced onto the frame path (cap=0) must emit
-    the exact EL table of the dict path — the whole tagged -> spans ->
-    aliases -> scoring chain through DataFrame dims."""
-    import kbspark.jobs as jobs
-
-    via_dict = _rows(jobs.entity_linking_job(spark, sf001_dir))
-    via_frames = _rows(
-        jobs.entity_linking_job(spark, sf001_dir, dim_collect_cap=0)
     )
     assert via_frames == via_dict
     assert len(via_frames) > 0

@@ -80,7 +80,8 @@ def _count_calls(monkeypatch, calls):
 
 @pytest.mark.parametrize("cap", [None, 0])
 @pytest.mark.parametrize(
-    "job", ["entity_linking_job", "flagship_triples", "build_knowledge_base"]
+    "job", ["entity_linking_job", "flagship_triples", "tagged_table",
+            "build_knowledge_base"]
 )
 def test_each_job_resolves_dims_once(spark, sf001_dir, tmp_path,
                                      monkeypatch, job, cap):
